@@ -13,12 +13,17 @@ the relational form of the reference's index pushdown.  Byte-level pushdown
 (only *reading* overlapping file regions) lives in the sources package; this
 module is the post-scan residual filter, which Catalyst pushes into the scan
 when the source supports it (parquet min/max row-group pruning does the same
-job the genomics indexes do).
+job the genomics indexes do).  The index-aware sources collect the interval
+list once for their index query and hand the residual a local relation
+rebuilt from it (``local_intervals``), so the residual never re-runs the
+caller's interval plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from ..cache import track_persist
 from pyspark.sql import functions as F
 
@@ -35,6 +40,37 @@ def overlaps(
     return (contig == i_contig) & (start <= i_end) & (end >= i_start)
 
 
+def collect_intervals(intervals: DataFrame) -> list[tuple[str, int, int]]:
+    """The (contig, start, end) rows of an interval frame, on the driver."""
+    return [
+        (r["contig"], int(r["start"]), int(r["end"]))
+        for r in intervals.select("contig", "start", "end").collect()
+    ]
+
+
+def local_intervals(
+    spark: SparkSession, ivs: Sequence[tuple[str, int, int]]
+) -> DataFrame:
+    """An already-collected interval list as a (contig, start, end) frame
+    that plans as a ``LocalTableScan``: building it runs no job, and its
+    broadcast is a single JVM task over the driver-held rows instead of a
+    re-run of the caller's (possibly RDD-backed) interval plan.  Built
+    from an Arrow table, which Spark turns into a local relation whatever
+    the session's Arrow setting."""
+    import pyarrow as pa
+
+    contigs, starts, ends = zip(*ivs) if ivs else ((), (), ())
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "contig": pa.array(contigs, pa.string()),
+                "start": pa.array(starts, pa.int64()),
+                "end": pa.array(ends, pa.int64()),
+            }
+        )
+    )
+
+
 def interval_filter(
     records: DataFrame,
     intervals: DataFrame,
@@ -46,7 +82,9 @@ def interval_filter(
     """Keep records overlapping ANY interval (left-semi against a broadcast
     interval list), optionally unioned with unplaced-unmapped records.
 
-    ``intervals`` must have columns (contig, start, end).  Mirrors
+    ``intervals`` must have columns (contig, start, end).  The broadcast
+    runs ``intervals``' plan once per query; the sources pass a
+    ``local_intervals`` frame, whose broadcast is one JVM task.  Mirrors
     `HtsjdkReadsTraversalParameters` = interval list + unplaced flag; the
     `intervals is None and not unplaced` error is the reference's contract
     (`AbstractBinarySamSource.java:50-54`).

@@ -88,7 +88,6 @@ _N_BANDS = 4  # bands of 2 hashes each
 # 8 minhash functions from 2 md5s per shingle: each md5's 32 hex chars slice
 # into 4×8-char (32-bit) hashes; lexicographic min of fixed-width hex ==
 # numeric min.  Explode-once + partial-agg min keeps the shuffle tiny.
-_SALTS = ("a", "b")
 _SLICES = [(s, 1 + 8 * i) for s in range(2) for i in range(4)]  # (salt_idx, hexpos)
 
 _SIG_AGG_SQL = ", ".join(
@@ -128,12 +127,8 @@ def _doc_signatures(spark: SparkSession, sf: str) -> DataFrame:
     encoding entirely and take the 8 per-slice minimums as ONE numpy
     column-min over the packed digest matrix instead of 8 Python
     comparisons per shingle."""
-    import os
-
-    hex_mode = os.environ.get("SPARK_GRAFT_SIG_HEX") == "1"  # TEMP A/B switch
-    kind = "string" if hex_mode else "binary"
     schema = "doc_id long, " + ", ".join(
-        f"mh{j} {kind}" for j in range(len(_SLICES))
+        f"mh{j} binary" for j in range(len(_SLICES))
     )
 
     def gen(batches):
@@ -151,21 +146,6 @@ def _doc_signatures(spark: SparkSession, sf: str) -> DataFrame:
                     # NULL text: the oracle keeps a NULL-signature row whose
                     # NULL band_key can never join; omitting the doc gives
                     # the identical pair set.
-                    continue
-                if hex_mode:
-                    mins: list[str | None] = [None] * len(_SLICES)
-                    for s in sh:
-                        hexes = [
-                            md5(f"{salt}:{s}".encode()).hexdigest()
-                            for salt in _SALTS
-                        ]
-                        for j, (si, p) in enumerate(_SLICES):
-                            piece = hexes[si][p - 1 : p + 7]
-                            if mins[j] is None or piece < mins[j]:
-                                mins[j] = piece
-                    out["doc_id"].append(doc_id)
-                    for j in range(len(_SLICES)):
-                        out[f"mh{j}"].append(mins[j])
                     continue
                 # one (n_shingles x 8) big-endian uint32 matrix: row = the
                 # two 16-byte digests of one shingle, columns = the 8
@@ -208,13 +188,9 @@ def _band_rows(sig: DataFrame) -> DataFrame:
     green — at 100 TB this exchange carries 4 rows per corpus document.
     The mh slots arrive binary from _doc_signatures, so the key is a
     plain concat."""
-    import os
-
-    unhex_needed = os.environ.get("SPARK_GRAFT_SIG_HEX") == "1"  # TEMP A/B
 
     def key(b: int) -> F.Column:
-        c = F.concat(F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-        return F.unhex(c) if unhex_needed else c
+        return F.concat(F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
 
     band_structs = F.array(
         *[
@@ -1195,11 +1171,7 @@ def d14(spark: SparkSession, sf: str) -> DataFrame:
     # auto-broadcasts so no sig exchange exists to shrink; at 100 TB the
     # pairs frame outgrows the broadcast cap and both sig sides shuffle
     # by doc id, which is where the 4x key cut pays.
-    import os
-
     sig_bin = F.concat(*[F.col(f"mh{j}") for j in range(len(_SLICES))])
-    if os.environ.get("SPARK_GRAFT_SIG_HEX") == "1":  # TEMP A/B switch
-        sig_bin = F.unhex(sig_bin)
     sa = sig.select(F.col("doc_id").alias("a_id"), sig_bin.alias("abin"))
     sb = sig.select(F.col("doc_id").alias("b_id"), sig_bin.alias("bbin"))
     est_expr = sum(

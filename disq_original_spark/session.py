@@ -4,8 +4,9 @@ Local testing runs on ``local[N]`` but every setting is chosen to also be the
 right default on a 1000-executor cluster reading ~100 TB:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic broadcast demotion).
-- Shuffle partitions sized for the local harness via env; on a real cluster AQE
-  coalesces from a high initial number, so the static value matters little.
+- Master and shuffle partitions sized from ``SPARK_GRAFT_CPUS``, else from the
+  cores this process may use; on a real cluster AQE coalesces from a high
+  initial number, so the static value matters little.
 - Arrow enabled for the (few) pandas-UDF paths.
 - ``maxPartitionBytes`` left at Spark's 128 MB default — matches the
   reference's Hadoop-default split size (SURVEY §4, PathSplitSource).
@@ -26,7 +27,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on (its CPU affinity), not
+    # every core of the machine
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (

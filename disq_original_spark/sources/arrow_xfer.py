@@ -5,10 +5,12 @@ Python→JVM boundary; profiling the BAM path showed ~5% decode / ~95%
 serialization.  ``mapInPandas`` ships columnar Arrow batches instead, which
 removes nearly all of that cost while keeping the decode code unchanged.
 
-Shape: the task list (split/range descriptors) becomes a one-row-per-
-partition DataFrame — ``parallelize(n, n)`` preserves list order and
-``mapInPandas`` preserves partitioning, so the file-order contract of the
-sources (SURVEY §2.6) survives the transfer plane.
+Shape: the task list (split/range descriptors) stays in the closure; its
+index becomes a one-row-per-partition JVM frame — ``spark.range(0, n, 1, n)``
+puts task i alone in partition i, and ``mapInPandas`` preserves
+partitioning, so the file-order contract of the sources (SURVEY §2.6)
+survives the transfer plane.  The range scan runs in the JVM, so the decode
+is the only Python stage of the job.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _ARROW_BATCH = 8192  # rows per Arrow batch handed to the JVM
@@ -53,11 +56,8 @@ def rows_to_dataframe(
                 if buf:
                     yield to_pdf(buf)
 
-    n = max(1, len(tasks))
-    idx = spark.createDataFrame(
-        spark.sparkContext.parallelize([(i,) for i in range(len(tasks))], n),
-        "i int",
-    )
+    n = len(tasks)
+    idx = spark.range(0, n, 1, max(1, n)).select(F.col("id").cast("int").alias("i"))
     return idx.mapInPandas(gen, schema)
 
 

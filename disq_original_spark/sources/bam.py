@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.interval import interval_filter
+from ..operators.interval import collect_intervals, local_intervals, residual_traversal
 from .bam_codec import (
     BamRecordGuesser,
     MAX_READ_SIZE,
@@ -456,20 +456,13 @@ class BamSource:
         header, refs, first_voffset0 = read_bam_header(files[0])
         ref_names = [r[0] for r in refs]
         n_ref = len(refs)
-        # Collect the (tiny) interval list once, not once per input file.
-        iv_rows = (
-            intervals.select("contig", "start", "end").collect()
-            if intervals is not None and not include_unplaced
-            else None
-        )
+        # Collect the (tiny) interval list once, not once per input file;
+        # the residual filter reuses it as a local relation.
+        iv_rows = collect_intervals(intervals) if intervals is not None else None
         ivs = None
-        if iv_rows is not None:
+        if iv_rows is not None and not include_unplaced:
             name_to_id = {nm: i for i, nm in enumerate(ref_names)}
-            ivs = [
-                (name_to_id[r["contig"]], int(r["start"]), int(r["end"]))
-                for r in iv_rows
-                if r["contig"] in name_to_id
-            ]
+            ivs = [(name_to_id[c], s, e) for c, s, e in iv_rows if c in name_to_id]
         metas = _collect_file_metadata(spark, files, fs, use_sbi, ivs)
         # queryname-sorted input: enforce the pair-integrity guarantee
         # (README.md:155-159) by switching record ownership to qname groups
@@ -496,9 +489,8 @@ class BamSource:
                 internal |= {"flag", "rname", "pos", "cigar"}
             fields = frozenset(internal)
         reads = _decode_splits_arrow(spark, split_rows, file_params, fields)
-        from ..operators.interval import residual_traversal
-
-        out = residual_traversal(reads, intervals, include_unplaced)
+        residual_ivs = None if iv_rows is None else local_intervals(spark, iv_rows)
+        out = residual_traversal(reads, residual_ivs, include_unplaced)
         if columns is not None:
             out = out.select(*schema_ordered(READS_COLUMNS, columns))
         return out
@@ -724,7 +716,7 @@ class BamSink:
             from .merger import list_parts
 
             index_meta = []
-            for p in sorted(list_parts(temp_dir)):
+            for p in list_parts(temp_dir):
                 with fs.open_input(fs_join(temp_dir, f".idx-{fs_basename(p)}.json")) as mh:
                     index_meta.append(json.loads(mh.read().decode()))
         merge_parts(temp_dir, path, header=header_block, terminator=EMPTY_GZIP_BLOCK)

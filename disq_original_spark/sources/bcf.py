@@ -989,12 +989,9 @@ class BcfSource:
             # residual overlap filter: index-chunk pruning alone returns a
             # candidate SUPERSET; the shared residual_variant_overlap is the
             # same exact-match contract VcfSource.read applies
-            from ..operators.interval import residual_variant_overlap
+            from ..operators.interval import local_intervals, residual_variant_overlap
 
-            iv_df = spark.createDataFrame(
-                list(intervals), "contig string, start long, end long"
-            )
-            df = residual_variant_overlap(df, iv_df)
+            df = residual_variant_overlap(df, local_intervals(spark, list(intervals)))
         if columns is not None:
             df = df.select(*schema_ordered(VARIANTS_COLUMNS, columns))
         return df
@@ -1136,7 +1133,7 @@ class BcfSink:
             from .fsio import fs_basename, fs_join
             from .merger import list_parts
 
-            for p in sorted(list_parts(temp_dir)):
+            for p in list_parts(temp_dir):
                 with fs.open_input(
                     fs_join(temp_dir, f".idx-{fs_basename(p)}.json")
                 ) as mh:

@@ -27,6 +27,7 @@ from typing import BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.interval import collect_intervals, local_intervals, residual_traversal
 from .fsio import fs_exists, fs_join, fs_open, fs_size, get_fs
 
 CRAM_MAGIC = b"CRAM"
@@ -398,14 +399,7 @@ class CramSource:
 
         fs = get_fs(str(path))
         files = list_data_files(fs, str(path))
-        iv_rows = (
-            [
-                (r["contig"], int(r["start"]), int(r["end"]))
-                for r in intervals.select("contig", "start", "end").collect()
-            ]
-            if intervals is not None
-            else None
-        )
+        iv_rows = collect_intervals(intervals) if intervals is not None else None
 
         def meta_for(f: str):
             """(file, flen, ((start, end), ...), first_container_offset)."""
@@ -523,9 +517,8 @@ class CramSource:
             spark, ranges, decode_range, out_cols, out_schema
         )
         if intervals is not None or include_unplaced:
-            from ..operators.interval import residual_traversal
-
-            df = residual_traversal(df, intervals, include_unplaced)
+            residual_ivs = None if iv_rows is None else local_intervals(spark, iv_rows)
+            df = residual_traversal(df, residual_ivs, include_unplaced)
         if columns is not None:
             df = df.select(*schema_ordered(READS_COLUMNS, columns))
         return df
@@ -617,7 +610,7 @@ class CramSink:
 
             from .fsio import fs_basename
 
-            for p in sorted(list_parts(temp_dir)):
+            for p in list_parts(temp_dir):
                 with fs.open_input(fs_join(temp_dir, f".idx-{fs_basename(p)}.json")) as mh:
                     index_meta.append(json.loads(mh.read().decode()))
         merge_parts(temp_dir, path, header=header, terminator=eof_container(major))

@@ -4,13 +4,16 @@ driver-written header (and optional terminator) into one output file.
 Reference parity: `file/Merger.java:9-30` + `file/HadoopFileSystemWrapper.java:86-121`
 — try the filesystem's server-side concat fast path (HDFS ``concat`` /
 object-store multipart compose) first, fall back to a serial stream copy.
-Parts are ordered lexicographically; files starting with '.' or '_' are
-ignored (Hadoop convention).  All IO goes through the pluggable filesystem
-layer (``fsio``), so the commit works on any registered scheme.
+Parts are ordered by the numeric partition id of their ``part-NNNNN``
+prefix (the names Spark's own writers use too), not as strings: a string
+sort puts ``part-100000`` before ``part-99999``.  Files starting with '.'
+or '_' are ignored (Hadoop convention).  All IO goes through the pluggable
+filesystem layer (``fsio``), so the commit works on any registered scheme.
 """
 
 from __future__ import annotations
 
+import re
 import shutil
 from pathlib import Path
 
@@ -19,13 +22,16 @@ from .fsio import fs_basename, fs_join, get_fs
 _COPY_BUF = 8 * 1024 * 1024
 
 
+_PART_ID = re.compile(r"part-(\d+)")
+
+
 def list_parts(temp_dir: str | Path) -> list[str]:
+    """The ``part-NNNNN…`` files of ``temp_dir``, in partition-id order."""
     d = str(temp_dir)
-    return [
-        p
-        for p in get_fs(d).listdir(d)
-        if not fs_basename(p).startswith((".", "_"))
-    ]
+    return sorted(
+        (p for p in get_fs(d).listdir(d) if not fs_basename(p).startswith((".", "_"))),
+        key=lambda p: int(_PART_ID.match(fs_basename(p)).group(1)),
+    )
 
 
 def merge_parts(

@@ -25,6 +25,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.interval import collect_intervals, local_intervals, residual_variant_overlap
 from .fsio import fs_basename, fs_join, fs_open, get_fs, list_data_files
 from .headers import read_vcf_header_text, vcf_sample_names
 from .merger import merge_parts
@@ -184,16 +185,10 @@ class VcfSource:
 
         with fs_open(_first(path)) as fh:
             bgzf = is_bgzf(fh)
-        ivs = None
-        if intervals is not None:
-            ivs = [
-                (r["contig"], int(r["start"]), int(r["end"]))
-                for r in intervals.select("contig", "start", "end").collect()
-            ]
+        ivs = None if intervals is None else collect_intervals(intervals)
         if bgzf:
-            # tabix split pruning: with intervals + a .tbi, drop byte-range
-            # splits the index proves contain no overlapping record
-            # (reference `vcf/VcfSource.java:143-168`)
+            # tabix pushdown: with intervals + a .tbi, read only the index
+            # chunks (reference `vcf/VcfSource.java:143-168`)
             lines = _read_bgzf_lines(spark, path, split_size, ivs=ivs)
         else:
             fs = get_fs(str(path))
@@ -232,11 +227,9 @@ class VcfSource:
         ).isNull()
         body = apply_stringency(body, malformed, stringency)
         variants = parse_vcf_lines(body, samples)
-        if intervals is None:
+        if ivs is None:
             return variants
-        from ..operators.interval import residual_variant_overlap
-
-        return residual_variant_overlap(variants, intervals)
+        return residual_variant_overlap(variants, local_intervals(spark, ivs))
 
 
 def _first(path: str):
@@ -257,10 +250,21 @@ def _read_bgzf_lines(
     ranges); each task re-opens the file locally — at cluster scale `path`
     is on a shared store and the open goes through the cluster filesystem.
     With ``ivs`` (interval list), each file's own tabix ``.tbi`` (or
-    tabix-flavored ``.csi``) prunes that file's splits — per-file, so a
-    sharded directory with per-shard indexes prunes every shard; for many
-    files the size+index metadata collection runs as a Spark job, keeping
-    driver planning O(1) (same policy as BamSource)."""
+    tabix-flavored ``.csi``) drops the splits holding no index chunk, and
+    each kept split reads only the merged chunk ranges inside it — the VCF
+    twin of the BAM path's ``.bai`` clipping.  Line ownership stays
+    exactly-once (``bgzf.iter_lines_in_range``): a line belongs to the one
+    (split ∩ chunk) range holding its start block.  Per-file, so a sharded
+    directory with per-shard indexes prunes every shard; for many files
+    the size+index metadata collection runs as a Spark job, keeping driver
+    planning O(1) (same policy as BamSource).
+
+    With ``ivs``, tasks also drop, before any parse, the lines whose contig
+    has no interval or whose POS lies past that contig's largest interval
+    end (INFO/END only extends a record rightwards, so neither can
+    overlap).  Lines whose POS is not a plain integer pass through for
+    ``apply_stringency`` to judge; the exact overlap is the caller's
+    residual filter."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from .fsio import collect_metadata, list_data_files
@@ -340,33 +344,53 @@ def _read_bgzf_lines(
             )
         return (f, flen, franges)
 
-    ranges: list[tuple[str, int, int]] = []
+    from .tabix import prune_splits
+
+    # task = (file, byte ranges it reads): the whole split, or the index
+    # chunk ranges that fall inside it
+    tasks: list[tuple[str, list[tuple[int, int]]]] = []
     for f, flen, franges in collect_metadata(spark, files, meta_for):
         fr = [(s, min(s + split_size, flen)) for s in range(0, flen, split_size)]
-        if franges is not None:
-            from .tabix import prune_splits
+        if franges is None:
+            tasks.extend((f, [(s, e)]) for s, e in fr)
+            continue
+        for s, e in prune_splits(fr, franges):
+            tasks.append((f, [(max(s, a), min(e, b)) for a, b in franges if a < e and s < b]))
+    if not tasks:
+        tasks = [(files[0], [])]
 
-            fr = prune_splits(fr, franges)
-        ranges.extend((f, s, e) for s, e in fr)
-    if not ranges:
-        ranges = [(files[0], 0, 0)]
+    max_end: dict[bytes, int] | None = None
+    if ivs is not None:
+        max_end = {}
+        for contig, _start, end in ivs:
+            key = contig.encode()
+            max_end[key] = max(end, max_end.get(key, end))
+
+    def may_overlap(line: bytes) -> bool:
+        fields = line.split(b"\t", 2)
+        if len(fields) < 2 or not fields[1].isdigit():
+            return True
+        end = max_end.get(fields[0])
+        return end is not None and int(fields[1]) <= end
 
     def read_range(task):
         from .bgzf import iter_lines_in_range
         from .fsio import open_prefetched
 
-        f, s, e = task
+        f, ranges = task
         # readahead on remote filesystems: the block decode loop is strictly
         # sequential, so the next 4 MB downloads while this one inflates
         with open_prefetched(fs, f) as fh:
-            for line in iter_lines_in_range(fh, s, e):
-                yield {"value": line.decode("utf-8", "replace")}
+            for s, e in ranges:
+                for line in iter_lines_in_range(fh, s, e):
+                    if max_end is None or may_overlap(line):
+                        yield {"value": line.decode("utf-8", "replace")}
 
     from .arrow_xfer import rows_to_dataframe
 
     return rows_to_dataframe(
         spark,
-        ranges,
+        tasks,
         read_range,
         ["value"],
         StructType([StructField("value", StringType())]),
@@ -618,7 +642,7 @@ class VcfSink:
 
             from .merger import list_parts
 
-            for p in sorted(list_parts(temp_dir)):
+            for p in list_parts(temp_dir):
                 with fs.open_input(fs_join(temp_dir, f".idx-{fs_basename(p)}.json")) as mh:
                     index_meta.append(json.loads(mh.read().decode()))
         merge_parts(temp_dir, path, header=header_block, terminator=EMPTY_GZIP_BLOCK)

@@ -181,12 +181,9 @@ class VariantsStorage:
         if self._is_bcf(path):
             from .sources.bcf import BcfSource
 
-            ivs = None
-            if intervals is not None:
-                ivs = [
-                    (r["contig"], int(r["start"]), int(r["end"]))
-                    for r in intervals.select("contig", "start", "end").collect()
-                ]
+            from .operators.interval import collect_intervals
+
+            ivs = None if intervals is None else collect_intervals(intervals)
             # BcfSource.read applies the residual overlap filter itself —
             # same exact-match contract as VcfSource.read(intervals=...)
             return BcfSource().read(self.spark, path, intervals=ivs, columns=columns)

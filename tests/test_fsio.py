@@ -71,6 +71,30 @@ def test_merge_parts_uses_concat_fast_path(mock_fs):
     assert not mock_fs.exists("mock://t")  # temp removed
 
 
+def test_merge_parts_orders_by_partition_id(tmp_path):
+    """Past 100k partitions a string sort puts part-100000 before
+    part-99999; parts must concatenate in partition-id order, whether
+    named by the sinks or by Spark's text writer."""
+    from disq_original_spark.sources.merger import list_parts, merge_parts
+
+    t = tmp_path / "t"
+    t.mkdir()
+    for name, body in (
+        ("part-100000", b"C"),
+        ("part-99999", b"B"),
+        ("part-00002-0f1e-c000.txt", b"A"),
+        ("_SUCCESS", b"X"),
+    ):
+        (t / name).write_bytes(body)
+    assert [Path(p).name for p in list_parts(str(t))] == [
+        "part-00002-0f1e-c000.txt",
+        "part-99999",
+        "part-100000",
+    ]
+    merge_parts(str(t), str(tmp_path / "out.bin"))
+    assert (tmp_path / "out.bin").read_bytes() == b"ABC"
+
+
 def test_bam_roundtrip_on_mock_scheme(spark, mock_fs, tmp_path):
     from disq_original_spark.sources.bam import BamSink, BamSource
 

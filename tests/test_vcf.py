@@ -530,3 +530,144 @@ def test_plain_vcf_without_intervals_uses_native_text_scan(spark):
     df = VcfSource().read(spark, TEST_VCF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FileScan text" in plan
+
+
+# ---- tabix-chunk reads: synthetic in-repo inputs, each lookup checked
+# against a filtered full read ------------------------------------------
+
+_SYN_HEADER = (
+    "##fileformat=VCFv4.3\n"
+    "##contig=<ID=c1,length=100000>\n"
+    "##contig=<ID=c2,length=100000>\n"
+    "##contig=<ID=c3,length=100000>\n"
+    '##INFO=<ID=END,Number=1,Type=Integer,Description="End position">\n'
+    '##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">\n'
+    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
+)
+
+
+def _syn_lines(malformed_at: int | None = None) -> list[str]:
+    """c1: a record every 10 bp over 100..30090, one of them (POS 5000) a
+    deletion whose INFO/END reaches 25000; c2: 100..8090; c3: none.  With
+    ``malformed_at``, the c1 record at that POS loses its last 3 columns."""
+    out = []
+    for contig, n in (("c1", 3000), ("c2", 800)):
+        for i in range(n):
+            pos = 100 + 10 * i
+            alt, info = "C", "."
+            if contig == "c1" and pos == 5000:
+                alt, info = "<DEL>", "SVTYPE=DEL;END=25000"
+            line = f"{contig}\t{pos}\t.\tA\t{alt}\t50\tPASS\t{info}\tGT\t0/1"
+            if contig == "c1" and pos == malformed_at:
+                line = "\t".join(line.split("\t")[:6])
+            out.append(line)
+    return out
+
+
+@pytest.fixture(scope="module")
+def syn_vcf(tmp_path_factory):
+    from .util import write_bgzf_vcf
+
+    path = str(tmp_path_factory.mktemp("syn") / "syn.vcf.bgz")
+    write_bgzf_vcf(path, _SYN_HEADER, _syn_lines())
+    return path
+
+
+@pytest.fixture(scope="module")
+def syn_full(spark, syn_vcf):
+    """(key, end) of every record of a full read, end as ``variant_end``."""
+    return [
+        (_syn_key(r), int(r.info["END"]) if "END" in r.info else r.pos + len(r.ref) - 1)
+        for r in VcfSource().read(spark, syn_vcf).collect()
+    ]
+
+
+def _syn_key(r) -> tuple:
+    return (r.contig, r.pos, r.ref, tuple(r.alts))
+
+
+def _syn_lookup(spark, path: str, ivs: list[tuple[str, int, int]], **kw) -> list[tuple]:
+    iv = spark.createDataFrame(ivs, "contig string, start long, end long")
+    return sorted(_syn_key(r) for r in VcfSource().read(spark, path, intervals=iv, **kw).collect())
+
+
+def _syn_expected(full: list[tuple], ivs: list[tuple[str, int, int]]) -> list[tuple]:
+    return sorted(
+        k
+        for k, end in full
+        if any(k[0] == c and k[1] <= e and end >= s for c, s, e in ivs)
+    )
+
+
+def _chunk_lines(spark, path: str, split_size: int, ivs) -> list[str]:
+    from disq_original_spark.sources.vcf import _read_bgzf_lines
+
+    return [r.value for r in _read_bgzf_lines(spark, path, split_size, ivs=ivs).collect()]
+
+
+def test_vcf_chunk_read_starting_mid_block(spark, syn_vcf, syn_full):
+    from disq_original_spark.sources.tabix import bin_query_chunks, parse_tabix
+
+    ivs = [("c1", 15_005, 15_500)]
+    idx = parse_tabix(syn_vcf + ".tbi")
+    ri = idx.ref_index("c1")
+    chunks = bin_query_chunks(idx.bins[ri], idx.linear[ri], 15_005, 15_500)
+    assert any(u & 0xFFFF for u, _v in chunks)  # the chunk starts inside a block
+    got = _syn_lookup(spark, syn_vcf, ivs)
+    assert got == _syn_expected(syn_full, ivs) and len(got) == 51  # 50 + the deletion
+
+
+def test_vcf_chunk_read_adjacent_and_overlapping_intervals(spark, syn_vcf, syn_full):
+    overlapping = [("c1", 20_000, 21_000), ("c1", 20_500, 22_000)]
+    adjacent = [("c1", 20_000, 21_000), ("c1", 21_001, 23_000)]
+    for ivs in (overlapping, adjacent):
+        got = _syn_lookup(spark, syn_vcf, ivs)
+        assert got == _syn_expected(syn_full, ivs) and len(got) > 100
+        lines = _chunk_lines(spark, syn_vcf, 128 * 1024 * 1024, ivs)
+        assert len(lines) == len(set(lines))  # merged chunks: each line once
+
+
+def test_vcf_chunk_read_info_end_reaches_into_interval(spark, syn_vcf, syn_full):
+    """The deletion at POS 5000 lies far left of the interval, but its
+    INFO/END (25000) overlaps it: neither the chunk clip nor the line
+    filter may drop it."""
+    ivs = [("c1", 24_000, 24_100)]
+    got = _syn_lookup(spark, syn_vcf, ivs)
+    assert got == _syn_expected(syn_full, ivs)
+    assert ("c1", 5000, "A", ("<DEL>",)) in got
+
+
+def test_vcf_chunk_read_empty_regions(spark, syn_vcf):
+    for ivs in (
+        [("c1", 40_000, 40_500)],  # past the contig's data
+        [("c2", 1, 50)],  # before it
+        [("c3", 1, 10_000)],  # declared contig, no records
+        [("c9", 1, 10_000)],  # contig absent from the index
+    ):
+        assert _syn_lookup(spark, syn_vcf, ivs) == []
+
+
+def test_vcf_chunk_read_small_splits_yield_each_line_once(spark, syn_vcf, syn_full):
+    """At 1 KB splits the chunk ranges cross many split edges; the lines
+    read must be exactly those of the one-split read, each once."""
+    from disq_original_spark.sources.vcf import _read_bgzf_lines
+
+    ivs = [("c1", 1, 12_000), ("c2", 3_000, 6_000)]
+    assert _read_bgzf_lines(spark, syn_vcf, 1024, ivs=ivs).rdd.getNumPartitions() > 10
+    small = _chunk_lines(spark, syn_vcf, 1024, ivs)
+    whole = _chunk_lines(spark, syn_vcf, 128 * 1024 * 1024, ivs)
+    assert len(small) == len(set(small))
+    assert sorted(small) == sorted(whole)
+    got = _syn_lookup(spark, syn_vcf, ivs, split_size=1024)
+    assert got == _syn_expected(syn_full, ivs) and len(got) > 1000
+
+
+def test_vcf_chunk_read_malformed_line_still_strict(spark, tmp_path):
+    from .util import write_bgzf_vcf
+
+    path = str(tmp_path / "bad.vcf.bgz")
+    write_bgzf_vcf(path, _SYN_HEADER, _syn_lines(malformed_at=5010))
+    ivs = [("c1", 4_900, 5_100)]
+    assert len(_syn_lookup(spark, path, ivs, stringency="lenient")) == 21
+    with pytest.raises(Exception, match="malformed record"):
+        _syn_lookup(spark, path, ivs, stringency="strict")

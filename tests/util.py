@@ -57,3 +57,20 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
     if a != b:
         diffs = [(x, y) for x, y in zip(a, b) if x != y][:5]
         raise AssertionError(f"{name}: value mismatch; first diffs: {diffs}")
+
+
+def write_bgzf_vcf(path: str, header: str, lines: list[str], lines_per_block: int = 40) -> None:
+    """Write a BGZF VCF whose blocks each hold ``lines_per_block`` records
+    (many small blocks, so index chunks start and end inside them), then
+    its ``.tbi``."""
+    from disq_original_spark.sources.bgzf import BgzfWriter
+    from disq_original_spark.sources.tabix import create_tabix_index
+
+    with open(path, "wb") as fh, BgzfWriter(fh) as w:
+        w.write(header.encode())
+        w.flush_block()
+        for i, line in enumerate(lines, 1):
+            w.write(line.encode() + b"\n")
+            if i % lines_per_block == 0:
+                w.flush_block()
+    create_tabix_index(path)
